@@ -189,11 +189,12 @@ def main() -> None:
             cold[name] = round(time.perf_counter() - t0, 3)
             runs = []
             for _ in range(n_steady):
-                # Clear persisted intermediates BEFORE each timed run:
+                # Release materialized frames BEFORE each timed run:
                 # Spark's CacheManager matches canonicalized plans, so
                 # without this a steady-state run would silently read
                 # the previous run's persist() caches and under-report
-                # operators that materialize intermediates.
+                # operators that materialize intermediates; it also
+                # frees the previous run's checkpoint blocks.
                 registry.clear_caches(spark)
                 t0 = time.perf_counter()
                 _force(fn(spark, sf_dir))

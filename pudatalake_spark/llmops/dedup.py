@@ -34,7 +34,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..loaders import broadcast_below, cached, scan_bytes, spread, table
+from ..loaders import broadcast_below, scan_bytes, spread, table
 from ..registry import register
 from ..session import superstep_checkpoint
 from .similarity import _cos_pre, _with_norm
@@ -339,14 +339,14 @@ def near_jaccard_pairs(
     # Cached: the distinct instance table feeds three branches (set
     # sizes, the df dictionary, the flagged stream) and exchange
     # reuse does not recognize the diamond.
-    inst0 = cached(
+    inst0 = (
         pos.select(
             "doc_id",
             F.xxhash64(
                 F.expr(f"substring(t, i, {SHINGLE_LEN})")
             ).alias("shingle"),
         ).distinct()
-    )
+    ).persist()
     # Per-doc set size rides back onto the instances via a doc-keyed
     # agg join; AQE broadcasts it while |docs| is small and falls back
     # to a shuffle join at corpus scale - no hint needed either way.
@@ -380,9 +380,9 @@ def near_jaccard_pairs(
     # Broadcast tag (<= 256 rows by construction - broadcastable at
     # any corpus size; idx NULL = rare). Persisted: the rare stream
     # and the mask build both read it, and exchange reuse does not
-    # recognize the diamond. Evictable default storage level; the
-    # session-long cache lifecycle is documented in loaders.cached.
-    flagged = cached(inst.join(F.broadcast(hotdict), "shingle", "left"))
+    # recognize the diamond. Evictable default storage level, released
+    # by registry.clear_caches.
+    flagged = inst.join(F.broadcast(hotdict), "shingle", "left").persist()
     rare = flagged.filter(F.col("idx").isNull())
     masks = (
         flagged.filter(F.col("idx").isNotNull())
@@ -700,7 +700,7 @@ def minhash_verified_pairs(
     shingles up to xxhash64 collisions (P ~ n^2/2^64 per pair -
     negligible; the oracle gate measures recall on the exact bytes).
     """
-    banded = cached(_banded_signatures(_sampled_instances(docs)))
+    banded = _banded_signatures(_sampled_instances(docs)).persist()
     a = banded.alias("a")
     b = banded.alias("b")
     join_cond = (
@@ -710,36 +710,37 @@ def minhash_verified_pairs(
     )
     if pair_cond is not None:
         join_cond = join_cond & pair_cond(F.col("a.doc_id"), F.col("b.doc_id"))
-    cand = cached(
+    cand = (
         a.join(b, join_cond)
         .select(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
         .distinct()
-    )
+    ).persist()
     # Exact-Jaccard verification on full hashed shingle sets, built
     # ONLY for candidate docs: the semi join keeps the interpreted
     # per-doc array build proportional to the candidate count, not
     # the corpus (the banding design bounds |cand| ~ linear). cand is
-    # persisted - it has three consumers (the verify broadcast and
+    # persisted - it has three consumers (the verify join and
     # both endpoints of the doc-id restriction) and each reference
     # would otherwise replan the band self-join + distinct (measured:
     # the uncached form tripled the subtree, 37 vs 16 static-plan
     # Exchanges). The sets frame is persisted: both verify sides read
     # it and exchange reuse does not recognize the diamond. No
-    # broadcast hint on the semi join's build side: the candidate set
-    # is data-dependent (the r14 broadcast_below lesson); AQE converts
-    # from the real runtime size, which at fixture scale it does.
+    # broadcast hint on the semi join's build side nor on the verify
+    # join: the candidate set is data-dependent (the r14
+    # broadcast_below lesson); AQE converts from the real runtime
+    # size, which at fixture scale it does.
     cand_docs = cand.select(
         F.explode(F.array("doc1", "doc2")).alias("doc_id")
     )
-    sets = cached(
+    sets = (
         docs.join(cand_docs, "doc_id", "semi").select(
             "doc_id",
             _hashed_shingles_col().alias("s"),
         ).select("doc_id", "s", F.size("s").alias("n_sh"))
-    )
+    ).persist()
     verified = (
         sets.select(F.col("doc_id").alias("doc1"), F.col("s").alias("s1"), F.col("n_sh").alias("n1"))
-        .join(F.broadcast(cand), "doc1")
+        .join(cand, "doc1")
         .join(
             # Small side here is the cand-sized left; at local SF AQE
             # broadcasts, at 100 TB it shuffles on doc2 - both correct.
@@ -796,14 +797,14 @@ def minhash_signature_frames(
     with minhash_verified_pairs - identical values on the exploded
     arrays and on the flat instance feed, since min() is
     duplicate-insensitive)."""
-    sh = cached(docs.select("doc_id", _hashed_shingles_col().alias("s")))
+    sh = docs.select("doc_id", _hashed_shingles_col().alias("s")).persist()
     ex = sh.select(
         "doc_id",
         F.explode(
             F.filter("s", lambda h: h.bitwiseAND(F.lit(3)) == 0)
         ).alias("h"),
     )
-    banded = cached(_banded_signatures(ex))
+    banded = _banded_signatures(ex).persist()
     return sh, banded
 
 
@@ -1083,13 +1084,13 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id (AQE can still re-broadcast from REAL runtime sizes).
     Output identical either way (forced-shuffle branch pinned).
     """
-    e = cached(_with_norm(
+    e = _with_norm(
         spread(table(spark, sf_dir, "embeddings"), "vec_id").select(
             "vec_id",
             "embedding",
             F.transform("embedding", lambda x: x.cast("double")).alias("v"),
         )
-    ))
+    ).persist()
     banded = e.select(
         "vec_id",
         F.posexplode(
@@ -1185,7 +1186,7 @@ def cc_min_label(
     iterate; each round is two equi-joins + one map-side-combinable
     min-agg, all shuffle-partitioned on u.
     """
-    p = cached(pairs.select("doc1", "doc2"))
+    p = pairs.select("doc1", "doc2").persist()
     edges = p.select(
         F.col("doc1").alias("u"), F.col("doc2").alias("v")
     ).unionByName(
@@ -1287,7 +1288,7 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only clustering shape that survives 100 TB. Measured at sf0.1:
     20.1s (exact edges) -> ~7s (minhash edges), same output."""
     d = spread(table(spark, sf_dir, "documents"), "doc_id")
-    pairs = cached(minhash_verified_pairs(d, JACCARD_TAU).select("doc1", "doc2"))
+    pairs = minhash_verified_pairs(d, JACCARD_TAU).select("doc1", "doc2").persist()
     nodes = d.select(F.col("doc_id").alias("u"))
     lbl = cc_min_label(nodes, pairs)
     return lbl.select(

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..loaders import broadcast_below, cached, load, spread, table
+from ..loaders import broadcast_below, load, spread, table
 from ..operators.ranks import global_order
 from ..registry import register
 from ..session import superstep_checkpoint
@@ -711,9 +711,9 @@ def q_text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once. Measured at sf0.1: 2.7 s -> 0.95 s steady (contrast
     # q_graph_pagerank, where caching HURT: there the recomputation
     # was one cheap fused join, here it is the dominant CPU).
-    sp = cached(
+    sp = (
         d.filter(F.size(t) >= SPAN_LEN).select("doc_id", spans.alias("spans"))
-    )
+    ).persist()
     inst = sp.select("doc_id", F.explode("spans").alias("g"))
     dup = (
         inst.groupBy("g")
@@ -823,12 +823,12 @@ def q_text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     switch is asserted by the plan audit.
     """
     d = spread(table(spark, sf_dir, "documents"), "doc_id")
-    inst = cached(
+    inst = (
         d.select(
             "doc_id",
             F.posexplode(F.split("text", "\n")).alias("pos", "line"),
         ).withColumn("g", F.xxhash64("line"))
-    )
+    ).persist()
     hot = (
         inst.groupBy("g")
         .agg(F.count("*").alias("n"))
@@ -1661,7 +1661,7 @@ def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    grams = cached(grams)
+    grams = grams.persist()
     n = grams.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = grams.select(F.col("doc_id").alias("doc1"), "h")
     b = grams.select(F.col("doc_id").alias("doc2"), "h")
@@ -3292,25 +3292,21 @@ def q_sim_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dl and alltf are consumed by BOTH bm25 passes plus the
     # feedback-term miner (4 references of the corpus tokenize):
     # cache the two aggregated frames so the explode+agg runs once
-    # per frame instead of once per consumer (r14). cached(), not a
+    # per frame instead of once per consumer (r14). persist(), not a
     # checkpoint: the consumers are interleaved small joins and a
     # checkpoint's materialization barrier measured SLOWER than the
     # duplicate work it saved (2.67s -> 3.65s), while the cache
     # fills on first use with no extra job.
-    dl = cached(
-        words.groupBy("doc_id").agg(
-            F.count("*").cast("bigint").alias("dl")
-        )
-    )
+    dl = words.groupBy("doc_id").agg(
+        F.count("*").cast("bigint").alias("dl")
+    ).persist()
     corp = dl.agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("dl").cast("bigint").alias("total_len"),
     )
-    alltf = cached(
-        words.groupBy("doc_id", "w").agg(
-            F.count("*").cast("bigint").alias("tf")
-        )
-    )
+    alltf = words.groupBy("doc_id", "w").agg(
+        F.count("*").cast("bigint").alias("tf")
+    ).persist()
     alldf = alltf.groupBy("w").agg(
         F.count("*").cast("bigint").alias("df")
     )
@@ -3372,11 +3368,11 @@ def q_sim_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exp_terms feeds the expanded query AND the 'added' summary:
     # cache the <= PRF_EXPANSION_TERMS-row frame so the feedback
     # mining runs once (r14; cached not checkpointed, see dl note).
-    exp_terms = cached(
+    exp_terms = (
         cand.orderBy(F.desc("score"), "w")
         .limit(PRF_EXPANSION_TERMS)
         .select(F.col("w").alias("term"))
-    )
+    ).persist()
     q1 = q0.unionAll(exp_terms)
     expanded = bm25_for(q1)
     en = exp_terms.agg(

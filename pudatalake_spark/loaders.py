@@ -189,17 +189,6 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
 
-def cached(df: DataFrame) -> DataFrame:
-    """persist() with the documented session lifecycle: operators cache
-    diamond-shaped intermediates (both join branches read them and
-    exchange reuse does not recognize the diamond). The handle cannot
-    be unpersisted inside the builder - the returned plan is lazy, so
-    the cache only fills when the CALLER materializes. Blocks use the
-    default evictable MEMORY_AND_DISK level, so a long session (pytest,
-    the oracle driver) degrades to recompute under pressure instead of
-    OOM; bench.py additionally clearCache()s between timed runs."""
-    return df.persist()
-
 def broadcast_below(small: DataFrame, source: DataFrame,
                     max_bytes: int) -> DataFrame:
     """Size-switched broadcast hint (the q_dedup_cross_corpus

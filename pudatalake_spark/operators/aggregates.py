@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..loaders import cached, load, table
+from ..loaders import load, table
 from ..registry import register
 from ..functions.exact import avg_exact
 from .ranks import global_order, ntile_expr
@@ -1338,7 +1338,7 @@ def q_agg_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache the per-customer frame so the orders join+agg runs once
     # (the un-cached diamond re-scanned the fact join 24 times,
     # caught by the plan survey).
-    x = cached(x)
+    x = x.persist()
     g = x.groupBy("nation").agg(
         F.count("*").cast("bigint").alias("n_g"),
         F.sum("cents").cast("bigint").alias("x_g"),

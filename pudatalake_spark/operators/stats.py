@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..loaders import cached, table
+from ..loaders import table
 from ..registry import register
 from .ranks import global_order, ntile_expr
 
@@ -5941,13 +5941,11 @@ def q_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and med feeds two (deviation pass + final projection); neither
     # diamond is recognized by exchange reuse, so without persistence
     # the scan runs 4x and the heavy cumsum chain runs TWICE (measured
-    # 6.9 s warm at sf0.1 -> 4.5 s with the two cached() handles; the
+    # 6.9 s warm at sf0.1 -> 4.5 s with the two persisted handles; the
     # remainder is the two genuinely-sequential cumsum chains).
-    v = cached(
-        o.select(
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents")
-        )
-    )
+    v = o.select(
+        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents")
+    ).persist()
 
     def lower_median(col_df: DataFrame, col: str):
         g = col_df.groupBy(col).agg(F.count("*").cast("bigint").alias("c"))
@@ -5963,7 +5961,7 @@ def q_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").cast("bigint").alias("n"),
         )
 
-    med = cached(lower_median(v, "cents"))  # 1 row
+    med = lower_median(v, "cents").persist()  # 1 row
     dev = v.crossJoin(F.broadcast(med)).select(
         F.abs(F.col("cents") - F.col("m")).alias("d")
     )

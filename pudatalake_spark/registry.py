@@ -52,22 +52,14 @@ def load_all() -> None:
 
 
 def clear_caches(spark: Any) -> None:
-    """Evict every persisted intermediate created by operator builders
-    (the loaders.cached handles). Spark's CacheManager keys on
-    canonicalized plans, so clearCache() drops them all at once; the
-    blocks are evictable MEMORY_AND_DISK, but a long-lived session
-    (pytest, the oracle driver, bench --all) accumulates one diamond
-    per dedup/similarity operator, so callers running many queries
-    should invoke this between them to bound peak storage memory.
-
-    Deliberately does NOT call System.gc(): localCheckpoint blocks
-    (CC / PageRank supersteps) are freed by the ContextCleaner only
-    after a driver GC makes their RDDs unreachable, but forcing a
-    full STW collection between queries was MEASURED (r6) to cost
-    more than the stale blocks do (orig-16 9.0 s with forced GC vs
-    7.8 s without, at the same 32g heap); with a 32g heap the normal
-    G1 cycle reclaims them soon enough."""
+    """Release every block the builders materialized: persisted frames
+    (clearCache) and checkpointed ones (the localCheckpoint blocks
+    behind session.superstep_checkpoint, which clearCache misses).
+    Callers running many queries in one session call this between
+    them."""
     spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
 
 
 def queries() -> dict[str, Callable[[Any, str], Any]]:

@@ -176,8 +176,8 @@ def superstep_checkpoint(df, eager: bool = False):
       replication, no distributed-FS round-trip. Measured best on the
       bench box (eager ``persist()`` was WORSE: the cache boundary
       blocks codegen fusion + AQE, BASELINE.md r5). Caveat: blocks are
-      non-replicated and pinned for the session; losing an executor
-      fails the job instead of recomputing.
+      non-replicated and live until ``registry.clear_caches``; losing
+      an executor fails the job instead of recomputing.
     - ``spark.pudatalake.checkpoint.dir=<path>``: reliable
       ``checkpoint()`` into that directory (set once per session via
       ``sparkContext.setCheckpointDir``; the first dir wins - the JVM
@@ -225,7 +225,7 @@ def get_spark(
     """Build (or get) a session with the engine's standard config."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(os.environ.get("PUDL_SHUFFLE_PARTITIONS", "32"))
+    shuffle = shuffle_partitions or 32
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -218,11 +218,6 @@ def s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("s_stream_dedup")
 
 
-def _running_agg(pdf_iter):
-    for pdf in pdf_iter:
-        yield pdf
-
-
 @register("s_stateful_running")
 def s_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful per-user aggregate via applyInPandasWithState:

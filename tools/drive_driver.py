@@ -78,9 +78,9 @@ for name in sorted(Q):
         results[name] = {"status": "ERR", "detail": fails[-1][1]}
         print(f"  {name}: EXC {str(e)[:150]}")
     finally:
-        # Bound peak storage memory: drop operator persist() caches
-        # before the next query (they are per-query diamonds, not
-        # cross-query reuse).
+        # Bound peak storage memory: release the query's persisted and
+        # checkpointed blocks before the next query (they are
+        # per-query, not cross-query reuse).
         R.clear_caches(spark)
 
 print(f"\nT2: {ok} oracle-match, {rows_only} rows-only, {len(fails)} FAIL")
